@@ -7,7 +7,6 @@ from tapes_spark.functions.normalize import (  # noqa: F401
     normalize_text_py,
     normalize_whitespace_col,
     normalized_text_col,
-    preview_text_col,
     normalize_model_col,
     preview_cap_col,
 )

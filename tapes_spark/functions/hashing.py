@@ -62,7 +62,7 @@ _CHAIN_SCHEMA = StructType(
 )
 
 
-def chain_hashes(df: DataFrame, pre_clustered: bool = False) -> DataFrame:
+def chain_hashes(df: DataFrame) -> DataFrame:
     """P11 entry: per-conversation cumulative chain hash.
 
     Input needs: conv_id, turn_idx, block_sig, and call_kind (injected
@@ -89,9 +89,7 @@ def chain_hashes(df: DataFrame, pre_clustered: bool = False) -> DataFrame:
     )
     from tapes_spark.functions.partitioning import cluster_sorted
 
-    arranged = cluster_sorted(
-        narrow, "conv_id", "turn_idx", assume_clustered=pre_clustered
-    )
+    arranged = cluster_sorted(narrow, "conv_id", "turn_idx")
 
     def fold(batches):
         # carry (conv, spine) across Arrow batches: a conversation can

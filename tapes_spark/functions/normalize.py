@@ -150,13 +150,6 @@ def _strip_tags_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda s: strip_harness_tags(s) if s is not None else None)
 
 
-@pandas_udf(StringType())
-def _preview_tags_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda s: strip_harness_tags(s, CONTENT_BEARING_TAGS) if s is not None else None
-    )
-
-
 _STRIP_BOTH_TYPE = StructType(
     [
         StructField("stripped", StringType()),
@@ -222,16 +215,11 @@ def normalized_text_col(c: Column) -> Column:
     return normalize_whitespace_col(stripped)
 
 
-def preview_text_col(c: Column) -> Column:
-    """N4 over a text column (content-bearing tags unwrapped)."""
-    stripped = F.when(_maybe_tagged(c), _preview_tags_udf(c)).otherwise(c)
-    return normalize_whitespace_col(stripped)
-
-
 def normalized_and_preview_cols(c: Column) -> tuple[Column, Column]:
     """Both N1+N2 and N4 from ONE pandas-UDF pass (struct-returning UDF,
     gated on the native contains('<') pre-filter).  Use this in the
-    pipeline hot path; the single-column variants exist for ad-hoc use."""
+    pipeline hot path; :func:`normalized_text_col` serves callers that
+    need only N1+N2."""
     both = F.when(
         _maybe_tagged(c), _strip_both_udf(c)
     ).otherwise(F.struct(c.alias("stripped"), c.alias("preview")))

@@ -23,9 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cluster_sorted(
-    df: DataFrame, key: str, *order: str, assume_clustered: bool = False
-) -> DataFrame:
+def cluster_sorted(df: DataFrame, key: str, *order: str) -> DataFrame:
     """Hash-cluster *df* by *key* (one partition per key, planner-proof)
     and sort each partition by (key, *order).
 
@@ -38,14 +36,6 @@ def cluster_sorted(
     keys = list(order)
     if "src_conv_id" in df.columns and "src_conv_id" not in keys:
         keys.append("src_conv_id")
-    if assume_clustered:
-        # r6: the caller guarantees every key's rows already share one
-        # physical partition (the frame descends from a conv_id-BUCKETED
-        # stage table scan — one task per bucket, never a split-union).
-        # The guard exchange is then pure waste; only the per-partition
-        # sort is kept (cheap: bucket files are (key, order)-sorted, and
-        # narrowing joins/filters preserve clustering).
-        return df.sortWithinPartitions(key, *keys)
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     return df.repartition(n, F.xxhash64(F.col(key))).sortWithinPartitions(
         key, *keys

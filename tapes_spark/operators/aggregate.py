@@ -12,7 +12,7 @@ Rebuilds SURVEY.md §2.6:
       EMPTY-FOLD semantics: every covered conversation gets a row even if
       the map is empty, so a re-derive can clear stale values.
   A4  Tasks fold (pkg/derive/tasks.go:14-111) — ordered stateful replay of
-      TaskCreate/TaskUpdate results; grouped-map pandas fold.
+      TaskCreate/TaskUpdate results; native window + max_by algebra.
   A5  status ladder (pkg/derive/status.go:30-56; pkg/sessions/status.go:34-73).
   A6  conversation rollup (queries/spans.sql:210-262) — totals + turn_count
       + derived_model = MODE of main llm models (count desc, model asc).
@@ -31,17 +31,8 @@ north_rule's "salting for skewed long conversations".
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 TERMINAL_OK_STOPS = ("stop", "end_turn", "stop_sequence", "max_tokens")
 
@@ -212,81 +203,6 @@ def kind_counts(df: DataFrame, covered: DataFrame | None = None) -> DataFrame:
 
 
 # --------------------------------------------------------- A4 tasks fold
-
-_TASKS_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("tasks_json", StringType()),
-        StructField("n_tasks", IntegerType()),
-        StructField("n_updates", IntegerType()),
-    ]
-)
-
-
-def _tasks_fold_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Replay TaskCreate/TaskUpdate results in (ts, turn_idx) order —
-    id via regex ``#(\\d+)``, status/subject last-write-wins, 'deleted'
-    filtered, update counting (tapes tasks.go:14-111)."""
-    import re
-
-    created = re.compile(r"#(\d+)(?::\s*(.*))?")
-    updated = re.compile(r"#(\d+)(?:\s+status=(\w+))?(?:\s+subject=(.*))?")
-    pdf = pdf.sort_values(["ts", "turn_idx"])
-    tasks: dict[int, dict] = {}
-    n_updates = 0
-    conv_id = pdf["conv_id"].iloc[0] if len(pdf) else None
-    for tool, raw in zip(pdf["tool"].tolist(), pdf["result_text"].tolist()):
-        text = str(raw or "")
-        if tool == "TaskCreate":
-            m = created.search(text)
-            if m:
-                tid = int(m.group(1))
-                tasks[tid] = {
-                    "id": tid,
-                    "subject": (m.group(2) or "").strip(),
-                    "status": "open",
-                    "updates": 0,
-                }
-        elif tool == "TaskUpdate":
-            m = updated.search(text)
-            if m:
-                tid = int(m.group(1))
-                if tid in tasks:
-                    if m.group(2):
-                        tasks[tid]["status"] = m.group(2)
-                    if m.group(3):
-                        tasks[tid]["subject"] = m.group(3).strip()
-                    tasks[tid]["updates"] += 1
-                    n_updates += 1
-    live = [t for _, t in sorted(tasks.items()) if t["status"] != "deleted"]
-    return pd.DataFrame(
-        [
-            (
-                conv_id,
-                json.dumps(live, sort_keys=True, separators=(",", ":")),
-                len(live),
-                n_updates,
-            )
-        ],
-        columns=["conv_id", "tasks_json", "n_tasks", "n_updates"],
-    )
-
-
-def tasks_fold_grouped(tool_tape: DataFrame) -> DataFrame:
-    """A4 as a grouped-map pandas fold — the direct transcription of the
-    reference's sequential replay.  Kept as the semantic reference; the
-    production path is :func:`tasks_fold` (native), which a parity test
-    pins against this one.  Per-group Python invocation overhead makes
-    this ~10x slower on many small groups."""
-    task_rows = tool_tape.filter(
-        F.col("tool").isin("TaskCreate", "TaskUpdate")
-        & F.col("result_text").isNotNull()
-    ).select("conv_id", "turn_idx", "tool", "result_text",
-             F.col("result_ts").alias("ts"))
-    return task_rows.groupBy("conv_id").applyInPandas(
-        _tasks_fold_pdf, schema=_TASKS_SCHEMA
-    )
-
 
 def tasks_fold(tool_tape: DataFrame) -> DataFrame:
     """A4 tasks replay as native window + max_by algebra (no Python).

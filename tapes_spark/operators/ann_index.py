@@ -6,28 +6,14 @@ is built once, saved, and loaded per query); recomputing bucket codes
 from raw embeddings on every call is fine for one-shot jobs but wrong
 for a query service over a 100 TB corpus — the bucket table IS the
 index.  ``LshIndexTape`` materializes :func:`similarity.lsh_bucket_arrays`
-output into a snapshot-versioned :class:`TapeTable`, content-hash-keyed
-per vector (D4) and incrementally maintained (D3/D5):
-
-  * a vector already indexed under the same content hash is skipped
-    (``up_to_date`` — no decode, no matmul);
-  * a NEW vector id gets codes appended;
-  * a CHANGED vector (same id, different content hash) gets its
-    partition overwritten;
-  * a CONFIG change (dim/tables/bits/seed) invalidates the whole tape —
-    codes from different hyperplanes are not comparable — and triggers a
-    full rebuild.
+output as a :class:`ContentHashIndex` keyed per vector: unchanged
+vectors are skipped (no decode, no matmul), and a config change
+(dim/tables/bits/seed) rebuilds the whole tape.
 
 Queries (:meth:`topk`, :meth:`dup_pairs`) read the tape and share the
 exact query half of the recompute path (``similarity.topk_from_buckets``
 / ``pairs_from_buckets``), so indexed and recomputed answers are
 bit-identical for the same corpus snapshot.
-
-Scale notes: refresh shuffles only the (id, vec_hash) anti-join — the
-index is O(corpus) rows of n_tables longs, never broadcast; the only
-driver-side list is the CHANGED-id set handed to partition overwrite
-(bounded by the delta, not the corpus — new ids take the append path
-with no driver list at all).
 """
 
 from __future__ import annotations
@@ -40,6 +26,7 @@ from tapes_spark.operators.similarity import (
     pairs_from_buckets,
     topk_from_buckets,
 )
+from tapes_spark.tapelog.content_index import ContentHashIndex
 from tapes_spark.tapelog.table import TapeTable
 
 
@@ -50,7 +37,9 @@ def vec_content_hash(vec_col: str) -> F.Column:
     return F.xxhash64(F.col(vec_col).cast("array<double>").cast("string"))
 
 
-class LshIndexTape:
+class LshIndexTape(ContentHashIndex):
+    hash_col = "vec_hash"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -62,8 +51,7 @@ class LshIndexTape:
         vec_col: str = "embedding",
         id_col: str = "vec_id",
     ):
-        self.spark = spark
-        self.tape = TapeTable(spark, root)
+        super().__init__(spark, TapeTable(spark, root))
         self.dim = dim
         self.n_tables = n_tables
         self.bits = bits
@@ -74,98 +62,19 @@ class LshIndexTape:
             f"lsh-v1:dim={dim}:tables={n_tables}:bits={bits}:seed={seed}"
         )
 
-    # ---------------------------------------------------------- build
+    def content_hash(self) -> F.Column:
+        return vec_content_hash(self.vec_col)
 
     def _codes(self, embeddings: DataFrame) -> DataFrame:
-        """(id, vec_hash, buckets) for *embeddings* — ONE numpy matmul
-        batch path (similarity.lsh_bucket_arrays), hash attached by an
-        id equi-join so the mapInPandas stage stays (id, vec)-narrow."""
-        stamped = embeddings.select(
-            self.id_col, vec_content_hash(self.vec_col).alias("vec_hash")
-        )
-        codes = lsh_bucket_arrays(
+        """(id, buckets) — ONE numpy matmul batch path."""
+        return lsh_bucket_arrays(
             embeddings, self.dim, self.n_tables, self.bits, self.seed,
             self.vec_col, self.id_col,
         )
-        return codes.join(stamped, self.id_col)
-
-    def stored_config(self) -> str | None:
-        snaps = self.tape.snapshots()
-        if not snaps:
-            return None
-        return snaps[-1].get("lineage", {}).get("config")
 
     def refresh(self, embeddings: DataFrame) -> dict:
-        """One incremental maintenance pass; idempotent (a second call on
-        the same corpus is a no-op).  Returns per-action counts — the
-        decide() ladder for vectors (multimodal.plan_embeds is the media
-        analog)."""
-        lineage = {"config": self.config}
-        stored = self.stored_config()
-        if stored != self.config:
-            # config change (or empty tape): full rebuild — codes from
-            # different hyperplanes are not comparable
-            self.tape.overwrite(
-                self._codes(embeddings), {**lineage, "op": "full_build"}
-            )
-            return {"mode": "full", "indexed": self.tape.read().count(),
-                    "up_to_date": 0, "changed": 0}
-        current = self.tape.read().select(self.id_col, "vec_hash")
-        stamped = embeddings.select(
-            self.id_col, vec_content_hash(self.vec_col).alias("vec_hash")
-        )
-        todo_keys = stamped.join(
-            current, [self.id_col, "vec_hash"], "left_anti"
-        )
-        n_todo = todo_keys.count()  # anti-join only — no matmul yet
-        total = embeddings.count()
-        if n_todo == 0:
-            return {"mode": "incremental", "indexed": 0,
-                    "up_to_date": total, "changed": 0}
-        # changed = ids already indexed under a DIFFERENT content hash;
-        # this driver-side list is bounded by the delta, not the corpus
-        changed_ids = [
-            r[self.id_col]
-            for r in todo_keys.join(
-                current.select(self.id_col), self.id_col, "left_semi"
-            ).select(self.id_col).collect()
-        ]
-        todo = embeddings.join(
-            todo_keys.select(self.id_col), self.id_col, "left_semi"
-        )
-        codes = self._codes(todo)
-        n_changed = len(changed_ids)
-        if n_changed:
-            # derive the id type from the corpus schema: a hardcoded long
-            # would fail (or type-mismatch the semi/anti joins) for
-            # string-keyed corpora
-            from pyspark.sql.types import StructField, StructType
-
-            changed_df = self.spark.createDataFrame(
-                [(i,) for i in changed_ids],
-                StructType(
-                    [StructField(
-                        self.id_col, embeddings.schema[self.id_col].dataType
-                    )]
-                ),
-            )
-            self.tape.overwrite_partitions(
-                codes.join(changed_df, self.id_col, "left_semi"),
-                self.id_col, changed_ids,
-                {**lineage, "op": "reindex_changed"},
-            )
-            new_codes = codes.join(changed_df, self.id_col, "left_anti")
-        else:
-            new_codes = codes
-        n_new = n_todo - n_changed
-        if n_new:
-            self.tape.append(new_codes, {**lineage, "op": "append_new"})
-        return {
-            "mode": "incremental",
-            "indexed": n_todo,
-            "up_to_date": total - n_todo,
-            "changed": n_changed,
-        }
+        """One incremental maintenance pass (the ContentHashIndex ladder)."""
+        return self._refresh(embeddings)
 
     # ---------------------------------------------------------- query
 

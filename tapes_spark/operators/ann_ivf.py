@@ -46,7 +46,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tapes_spark.operators.ann_index import vec_content_hash
 from tapes_spark.operators.similarity import brute_cosine_topk
+from tapes_spark.tapelog.content_index import ContentHashIndex
+from tapes_spark.tapelog.table import TapeTable
 
 
 def _normalized(mat: np.ndarray) -> np.ndarray:
@@ -142,14 +145,19 @@ def ivf_train(
     # Lloyd iteration (~0.1 s/job of pure task overhead at 32 cores on a
     # 2k-row table); a large one keeps full parallelism.
     n_train = cached.count()
+    if n_train == 0:
+        cached.unpersist()
+        raise ValueError(
+            f"IVF train set is empty (train_fraction={train_fraction}): "
+            "no vectors to train centroids on"
+        )
     if n_train < n_clusters and train_fraction < 1.0:
         # An undersized hash sample would silently break the documented
-        # n_clusters x dim quantizer shape (or hit an opaque np.stack
-        # error when empty).  Raise a CLEAR error instead of silently
-        # retraining on the full corpus: train_fraction exists to bound
-        # train cost, and a silent full-corpus Lloyd run at scale is the
-        # exact cost surprise the knob guards against (the caller can
-        # widen the fraction or pass 1.0 explicitly).  The
+        # n_clusters x dim quantizer shape.  Raise a CLEAR error instead
+        # of silently retraining on the full corpus: train_fraction
+        # exists to bound train cost, and a silent full-corpus Lloyd run
+        # at scale is the exact cost surprise the knob guards against
+        # (the caller can widen the fraction or pass 1.0 explicitly).  The
         # clamp-to-corpus-size behavior for a genuinely tiny FULL corpus
         # is unchanged below.
         cached.unpersist()
@@ -342,7 +350,7 @@ def ivf_cosine_topk(
     )
 
 
-class IvfIndexTape:
+class IvfIndexTape(ContentHashIndex):
     """Persisted IVF index — the learned-quantizer analog of
     :class:`tapes_spark.operators.ann_index.LshIndexTape` (reference
     role: pkg/spanembed/store.go:176-180, the saved vector index).
@@ -350,21 +358,21 @@ class IvfIndexTape:
     Two snapshot-versioned tapes under one root:
 
       * ``centroids/`` — the trained quantizer, k x dim as (cluster,
-        pos, val) rows.  Trained ONCE per config; new data does NOT
-        retrain it (the standard IVF contract: the coarse quantizer is
-        fixed, assignment is cheap) — a config change or an explicit
-        ``refresh(..., retrain=True)`` rebuilds it.
-      * ``assignments/`` — (id, vec_hash, cluster), content-hash-keyed
-        per vector (D4) and incrementally maintained (D3/D5) with the
-        same decide() ladder as the LSH tape: unchanged hash = skip (no
-        matmul), new id = append, changed content = partition
-        overwrite.
+        pos, val) rows.  Trained ONCE per config, in the full-build hook;
+        new data does NOT retrain it (the standard IVF contract: the
+        coarse quantizer is fixed, assignment is cheap) — a config change
+        or an explicit ``refresh(..., retrain=True)`` rebuilds it.
+      * ``assignments/`` — (id, vec_hash, cluster), the
+        :class:`ContentHashIndex` tape: unchanged hash = skip (no
+        matmul), new id = append, changed content = partition overwrite.
 
     Queries load the k x dim centroid matrix driver-side (bounded by
     construction), rank probes, and FILTER the assignment tape — no
     corpus shuffle, no Python recompute; the exact re-rank reads only
     the candidate vectors.
     """
+
+    hash_col = "vec_hash"
 
     def __init__(
         self,
@@ -378,13 +386,11 @@ class IvfIndexTape:
         id_col: str = "vec_id",
         train_fraction: float = 1.0,
     ):
-        from tapes_spark.tapelog.table import TapeTable
-
-        self.spark = spark
         self.cent_tape = TapeTable(spark, os.path.join(root, "centroids"))
         self.assign_tape = TapeTable(
             spark, os.path.join(root, "assignments")
         )
+        super().__init__(spark, self.assign_tape)
         self.dim = dim
         self.n_clusters = n_clusters
         self.n_iters = n_iters
@@ -400,12 +406,6 @@ class IvfIndexTape:
         )
 
     # ---------------------------------------------------------- build
-
-    def stored_config(self) -> str | None:
-        snaps = self.cent_tape.snapshots()
-        if not snaps:
-            return None
-        return snaps[-1].get("lineage", {}).get("config")
 
     def load_centroids(self) -> np.ndarray:
         """The trained quantizer from the tape — k x dim, driver-side
@@ -435,99 +435,32 @@ class IvfIndexTape:
             ),
         )
 
-    def _assign(
-        self, embeddings: DataFrame, centroids: np.ndarray
-    ) -> DataFrame:
-        """(id, vec_hash, cluster) — hash attached by an id equi-join so
-        the matmul stage stays (id, vec)-narrow."""
-        from tapes_spark.operators.ann_index import vec_content_hash
+    def content_hash(self) -> F.Column:
+        return vec_content_hash(self.vec_col)
 
-        stamped = embeddings.select(
-            self.id_col, vec_content_hash(self.vec_col).alias("vec_hash")
+    def _codes(self, embeddings: DataFrame) -> DataFrame:
+        """(id, cluster) under the stored quantizer — one matmul per
+        batch."""
+        return ivf_assignments(
+            embeddings, self.load_centroids(), self.vec_col, self.id_col
         )
-        assigned = ivf_assignments(
-            embeddings, centroids, self.vec_col, self.id_col
+
+    def _full_build(self, embeddings: DataFrame, lineage: dict) -> None:
+        centroids = ivf_train(
+            embeddings, self.n_clusters, self.n_iters, self.seed,
+            self.vec_col, self.id_col, self.train_fraction,
         )
-        return assigned.join(stamped, self.id_col)
+        self.cent_tape.overwrite(
+            self._centroid_rows(centroids), {**lineage, "op": "train"}
+        )
+        super()._full_build(embeddings, lineage)
 
     def refresh(
         self, embeddings: DataFrame, retrain: bool = False
     ) -> dict:
-        """One incremental maintenance pass; idempotent.  Returns the
-        per-action counts of the decide() ladder."""
-        from tapes_spark.operators.ann_index import vec_content_hash
-
-        lineage = {"config": self.config}
-        if retrain or self.stored_config() != self.config:
-            centroids = ivf_train(
-                embeddings, self.n_clusters, self.n_iters, self.seed,
-                self.vec_col, self.id_col, self.train_fraction,
-            )
-            self.cent_tape.overwrite(
-                self._centroid_rows(centroids),
-                {**lineage, "op": "train"},
-            )
-            self.assign_tape.overwrite(
-                self._assign(embeddings, centroids),
-                {**lineage, "op": "full_build"},
-            )
-            return {
-                "mode": "full",
-                "indexed": self.assign_tape.read().count(),
-                "up_to_date": 0,
-                "changed": 0,
-            }
-        centroids = self.load_centroids()
-        current = self.assign_tape.read().select(self.id_col, "vec_hash")
-        stamped = embeddings.select(
-            self.id_col, vec_content_hash(self.vec_col).alias("vec_hash")
-        )
-        todo_keys = stamped.join(
-            current, [self.id_col, "vec_hash"], "left_anti"
-        )
-        n_todo = todo_keys.count()  # anti-join only — no matmul yet
-        total = embeddings.count()
-        if n_todo == 0:
-            return {"mode": "incremental", "indexed": 0,
-                    "up_to_date": total, "changed": 0}
-        changed_ids = [
-            r[self.id_col]
-            for r in todo_keys.join(
-                current.select(self.id_col), self.id_col, "left_semi"
-            ).select(self.id_col).collect()
-        ]  # bounded by the delta, not the corpus
-        todo = embeddings.join(
-            todo_keys.select(self.id_col), self.id_col, "left_semi"
-        )
-        codes = self._assign(todo, centroids)
-        n_changed = len(changed_ids)
-        if n_changed:
-            changed_df = self.spark.createDataFrame(
-                [(i,) for i in changed_ids],
-                StructType(
-                    [StructField(
-                        self.id_col, embeddings.schema[self.id_col].dataType
-                    )]
-                ),
-            )
-            self.assign_tape.overwrite_partitions(
-                codes.join(changed_df, self.id_col, "left_semi"),
-                self.id_col, changed_ids,
-                {**lineage, "op": "reassign_changed"},
-            )
-            new_codes = codes.join(changed_df, self.id_col, "left_anti")
-        else:
-            new_codes = codes
-        if n_todo - n_changed:
-            self.assign_tape.append(
-                new_codes, {**lineage, "op": "append_new"}
-            )
-        return {
-            "mode": "incremental",
-            "indexed": n_todo,
-            "up_to_date": total - n_todo,
-            "changed": n_changed,
-        }
+        """One incremental maintenance pass (the ContentHashIndex
+        ladder); ``retrain`` forces the full build."""
+        return self._refresh(embeddings, rebuild=retrain)
 
     # ---------------------------------------------------------- query
 

@@ -10,18 +10,11 @@ persists derived artifacts keyed by content hash and re-derives only
 dirty sessions, pkg/storage/postgres/derive.go:246-265,
 pkg/spanembed/store.go:176-180).
 
-Both tapes materialize their signature half into a snapshot-versioned
-:class:`TapeTable`, content-hash-keyed per document (D4) and
-incrementally maintained (D3/D5) with the decide() ladder:
-
-  * a doc already indexed under the same text hash is skipped
-    (``up_to_date`` — no tokenization, no signature);
-  * a NEW doc_id gets its signature appended;
-  * a CHANGED doc (same id, different text hash) gets its partition
-    overwritten;
-  * a CONFIG change invalidates the whole tape (signatures from
-    different permutations/seeds are not comparable) and triggers a
-    full rebuild.
+Both tapes materialize their signature half as a
+:class:`ContentHashIndex` keyed per document by its text hash: unchanged
+documents are skipped (no tokenization, no signature), and a config
+change rebuilds the whole tape (signatures from different
+permutations/seeds are not comparable).
 
 Queries share the recompute path's halves (``pairs_from_band_hashes`` +
 ``verify_jaccard`` for MinHash; ``pairs_from_simhashes`` for SimHash),
@@ -31,11 +24,6 @@ generated from the BATCH's signature rows joined against the stored
 corpus signatures — the batch side is O(batch) rows and broadcastable
 when small (AQE picks it), the corpus side is a columnar scan of stored
 longs, and no signature is ever recomputed.
-
-Scale notes: refresh shuffles only the (doc_id, doc_hash) anti-join; the
-only driver-side list is the CHANGED-id set handed to partition
-overwrite (bounded by the delta, not the corpus — new ids take the
-append path with no driver list at all).
 """
 
 from __future__ import annotations
@@ -50,6 +38,7 @@ from tapes_spark.operators.dedup import (
     simhash_signatures,
     verify_jaccard,
 )
+from tapes_spark.tapelog.content_index import ContentHashIndex
 from tapes_spark.tapelog.table import TapeTable
 
 
@@ -61,97 +50,25 @@ def doc_content_hash(text_col: str) -> F.Column:
     return F.xxhash64(F.coalesce(F.col(text_col), F.lit("")))
 
 
-class _DocIndexTape:
-    """Shared incremental-maintenance machinery: subclasses provide
-    ``config`` and ``_sign(docs) -> (doc_id, <signature cols>)``."""
+class _DocIndexTape(ContentHashIndex):
+    """Document index keyed by ``doc_id``; subclasses provide ``config``
+    and ``_codes(docs) -> (doc_id, <signature cols>)``."""
+
+    id_col = "doc_id"
+    hash_col = "doc_hash"
 
     def __init__(
         self, spark: SparkSession, root: str, text_col: str = "text"
     ):
-        self.spark = spark
-        self.tape = TapeTable(spark, root)
+        super().__init__(spark, TapeTable(spark, root))
         self.text_col = text_col
 
-    def _sign(self, docs: DataFrame) -> DataFrame:  # pragma: no cover
-        raise NotImplementedError
-
-    def _codes(self, docs: DataFrame) -> DataFrame:
-        """Signatures stamped with the content hash — attached by an id
-        equi-join so the signature stage stays (doc_id, toks)-narrow."""
-        stamped = docs.select(
-            "doc_id", doc_content_hash(self.text_col).alias("doc_hash")
-        )
-        return self._sign(docs).join(stamped, "doc_id")
-
-    def stored_config(self) -> str | None:
-        snaps = self.tape.snapshots()
-        if not snaps:
-            return None
-        return snaps[-1].get("lineage", {}).get("config")
+    def content_hash(self) -> F.Column:
+        return doc_content_hash(self.text_col)
 
     def refresh(self, docs: DataFrame) -> dict:
-        """One incremental maintenance pass; idempotent (a second call on
-        the same corpus is a no-op).  Returns per-action counts — the
-        decide() ladder for documents."""
-        lineage = {"config": self.config}
-        if self.stored_config() != self.config:
-            self.tape.overwrite(
-                self._codes(docs), {**lineage, "op": "full_build"}
-            )
-            return {"mode": "full", "indexed": self.tape.read().count(),
-                    "up_to_date": 0, "changed": 0}
-        current = self.tape.read().select("doc_id", "doc_hash")
-        stamped = docs.select(
-            "doc_id", doc_content_hash(self.text_col).alias("doc_hash")
-        )
-        todo_keys = stamped.join(
-            current, ["doc_id", "doc_hash"], "left_anti"
-        )
-        n_todo = todo_keys.count()  # anti-join only — no signatures yet
-        total = docs.count()
-        if n_todo == 0:
-            return {"mode": "incremental", "indexed": 0,
-                    "up_to_date": total, "changed": 0}
-        # changed = ids already indexed under a DIFFERENT text hash; this
-        # driver-side list is bounded by the delta, not the corpus
-        changed_ids = [
-            r["doc_id"]
-            for r in todo_keys.join(
-                current.select("doc_id"), "doc_id", "left_semi"
-            ).select("doc_id").collect()
-        ]
-        todo = docs.join(
-            todo_keys.select("doc_id"), "doc_id", "left_semi"
-        )
-        codes = self._codes(todo)
-        n_changed = len(changed_ids)
-        if n_changed:
-            from pyspark.sql.types import StructField, StructType
-
-            changed_df = self.spark.createDataFrame(
-                [(i,) for i in changed_ids],
-                StructType(
-                    [StructField(
-                        "doc_id", docs.schema["doc_id"].dataType
-                    )]
-                ),
-            )
-            self.tape.overwrite_partitions(
-                codes.join(changed_df, "doc_id", "left_semi"),
-                "doc_id", changed_ids,
-                {**lineage, "op": "reindex_changed"},
-            )
-            new_codes = codes.join(changed_df, "doc_id", "left_anti")
-        else:
-            new_codes = codes
-        if n_todo - n_changed:
-            self.tape.append(new_codes, {**lineage, "op": "append_new"})
-        return {
-            "mode": "incremental",
-            "indexed": n_todo,
-            "up_to_date": total - n_todo,
-            "changed": n_changed,
-        }
+        """One incremental maintenance pass (the ContentHashIndex ladder)."""
+        return self._refresh(docs)
 
 
 class MinHashIndexTape(_DocIndexTape):
@@ -174,7 +91,7 @@ class MinHashIndexTape(_DocIndexTape):
             f"minhash-v1:perms={num_perm}:bands={bands}:seed={seed}"
         )
 
-    def _sign(self, docs: DataFrame) -> DataFrame:
+    def _codes(self, docs: DataFrame) -> DataFrame:
         return minhash_band_hashes(
             docs, self.num_perm, self.bands, self.seed, self.text_col
         )
@@ -264,7 +181,7 @@ class SimHashIndexTape(_DocIndexTape):
         # version string still invalidates the tape on algorithm change.
         self.config = "simhash-v1:fnv64"
 
-    def _sign(self, docs: DataFrame) -> DataFrame:
+    def _codes(self, docs: DataFrame) -> DataFrame:
         return simhash_signatures(docs, self.text_col)
 
     # ---------------------------------------------------------- query

@@ -1,14 +1,16 @@
-"""Enrich stage — broadcast-join lookups + cost arithmetic.
+"""Enrich stage — dimension lookups + cost arithmetic.
 
-Rebuilds the reference's in-process lookup maps as explicit broadcast
-joins (SURVEY.md §2.5 J10/J11):
+Rebuilds the reference's in-process lookup maps (SURVEY.md §2.5
+J10/J11) as literal-map lookups over the static dims:
 
+  * role flags (conversation turn, side)
   * tool display-name / category / flags (tapes pkg/derive/spans.go:590-628)
   * cache-tiered model pricing (pkg/sessions/pricing.go:24-132)
 
-At 100 TB the fact side never shuffles for these joins — the dims are a
-few KB, broadcast to every executor; Catalyst keeps the scan pipeline
-intact (BroadcastHashJoin inside the same stage).
+Custom tool dims take the broadcast-join variant :func:`enrich_tool`:
+at 100 TB the fact side never shuffles for it — the dim is a few KB,
+broadcast to every executor, and Catalyst keeps the scan pipeline intact
+(BroadcastHashJoin inside the same stage).
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ def _literal_map(rows, key_idx: int, val_cols: list[tuple[str, int]]) -> Column:
     replaces the whole BroadcastHashJoin: no dim-side job, no broadcast
     exchange, no per-row hash-relation probe — the lookup folds into the
     same whole-stage-codegen project as the surrounding expressions.
-    The generic join variants below stay for ad-hoc/custom dims."""
+    The tool join variant below stays for ad-hoc/custom tool dims."""
     pairs = []
     for row in rows:
         pairs.append(F.lit(row[key_idx]))
@@ -83,7 +85,9 @@ def enrich_tool_static(df: DataFrame) -> DataFrame:
 
 
 def enrich_role_static(df: DataFrame) -> DataFrame:
-    """Static-dim variant of :func:`enrich_role` (literal map, no join)."""
+    """Role flags from the static ROLE_DIM_ROWS as a literal-map lookup;
+    unmatched roles are not conversation turns and sit on side
+    "unknown"."""
     from tapes_spark import dims
 
     m = _literal_map(
@@ -96,7 +100,14 @@ def enrich_role_static(df: DataFrame) -> DataFrame:
 
 
 def enrich_pricing_static(df: DataFrame) -> DataFrame:
-    """Static-dim variant of :func:`enrich_pricing` (literal map, no join)."""
+    """J10: cache-aware cost per llm turn (pricing.go:97-132), priced from
+    the static PRICING_DIM_ROWS as a literal-map lookup.
+
+    base input = max(input - cache_creation - cache_read, 0); each tier
+    priced separately; tokens/1e6 * $/Mtok.  Rows without a usage marker
+    or without a priced model get cost_usd = NULL (never silently 0 —
+    mirrors the reference's unknown-model behavior).
+    """
     from tapes_spark import dims
 
     m = _literal_map(
@@ -108,40 +119,6 @@ def enrich_pricing_static(df: DataFrame) -> DataFrame:
     return _with_cost(
         df, hit["input_per_mtok"], hit["output_per_mtok"],
         hit["cache_read_per_mtok"], hit["cache_write_per_mtok"],
-    )
-
-
-def enrich_role(df: DataFrame, role_dim_df: DataFrame) -> DataFrame:
-    dim = F.broadcast(role_dim_df.withColumnRenamed("role", "r_role"))
-    return (
-        df.join(dim, df["role"] == dim["r_role"], "left")
-        .drop("r_role")
-        .withColumn(
-            "is_conversation", F.coalesce(F.col("is_conversation"), F.lit(False))
-        )
-        .withColumn("side", F.coalesce(F.col("side"), F.lit("unknown")))
-    )
-
-
-def enrich_pricing(df: DataFrame, pricing_dim_df: DataFrame) -> DataFrame:
-    """J10: cache-aware cost per llm turn (pricing.go:97-132).
-
-    base input = max(input - cache_creation - cache_read, 0); each tier
-    priced separately; tokens/1e6 * $/Mtok.  Rows without a usage marker
-    or without a priced model get cost_usd = NULL (never silently 0 —
-    mirrors the reference's unknown-model behavior).
-    """
-    dim = F.broadcast(pricing_dim_df.withColumnRenamed("model", "p_model"))
-    joined = df.join(dim, df["model_norm"] == dim["p_model"], "left").drop("p_model")
-    return _with_cost(
-        joined,
-        F.col("input_per_mtok"), F.col("output_per_mtok"),
-        F.col("cache_read_per_mtok"), F.col("cache_write_per_mtok"),
-    ).drop(
-        "input_per_mtok",
-        "output_per_mtok",
-        "cache_read_per_mtok",
-        "cache_write_per_mtok",
     )
 
 

@@ -382,7 +382,7 @@ def _attach_verdicts_partition(batches):
             yield pd.DataFrame(done, columns=_VERDICT_OUT_COLS)
 
 
-def attach_verdicts(df: DataFrame, pre_clustered: bool = False) -> DataFrame:
+def attach_verdicts(df: DataFrame) -> DataFrame:
     """J3 entry: partitioned mapInPandas fold.
 
     Two narrowing steps keep the Arrow transfer proportional to the (rare)
@@ -411,9 +411,7 @@ def attach_verdicts(df: DataFrame, pre_clustered: bool = False) -> DataFrame:
     )
     from tapes_spark.functions.partitioning import cluster_sorted
 
-    narrow = cluster_sorted(
-        narrow, "conv_id", "turn_idx", assume_clustered=pre_clustered
-    )
+    narrow = cluster_sorted(narrow, "conv_id", "turn_idx")
     return narrow.mapInPandas(
         _attach_verdicts_partition, schema=_VERDICT_ATTACH_SCHEMA
     )

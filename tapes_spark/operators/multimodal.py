@@ -5,17 +5,13 @@ metadata struct; decode / feature-extract / resize / frame-sample run as
 Arrow-batched ``mapInPandas`` stages.  Decoding is REAL for every format
 expressible without codec libraries — pure-numpy 24-bit BMP and binary
 PPM header+pixel parses, non-interlaced 8-bit PNG including palette
-(stdlib zlib inflate + scanline defilter 0-4 + PLTE gather), baseline
-JPEG (``jpeg_codec.py``: stream-driven Huffman/quant tables, chroma
-subsampling, restart intervals), animated GIF (``gif_codec.py``: full
-LZW, interlace, transparency, disposal — the real multi-frame
-'video' path, frame-sampled), and 16-bit PCM WAV chunk walks
-(``_decode_media``) — end-to-end: decode -> block-mean resize
-(``_pool_to_grid``) -> pooled feature vector.  Formats needing real
-codec backends (MP3/MP4, plus progressive JPEG and interlaced/16-bit
-PNG) raise ``NotImplementedError`` in strict mode (swap in
-torchaudio/pyav on a real cluster) or fall back to a deterministic
-content-hash fake in test mode.
+(stdlib zlib inflate + scanline defilter 0-4 + PLTE gather), and 16-bit
+PCM WAV chunk walks (``_decode_media``) — end-to-end: decode ->
+block-mean resize (``_pool_to_grid``) -> pooled feature vector.  Formats
+needing real codec backends (JPEG, GIF, MP3/MP4, interlaced/16-bit PNG)
+raise ``NotImplementedError`` in strict mode (swap in Pillow/pyav on a
+real cluster) or fall back to a deterministic content-hash fake in test
+mode.
 
 Scale notes: binary payloads dominate row size, so the batch size for
 mapInPandas stages must be bounded by BYTES not rows —
@@ -316,35 +312,22 @@ def _decode_media(payload: bytes, fake: bool) -> np.ndarray:
 
     REAL pure-numpy decoders cover what this container can express
     without codec libraries: 24-bit BMP, binary PPM, non-interlaced
-    8-bit PNG (stdlib zlib), baseline JPEG (jpeg_codec.py: stream-driven
-    DHT/DQT, 4:4:4/4:2:2/4:2:0, restart intervals), 16-bit PCM WAV.
-    MP3/MP4 still raise NotImplementedError in strict mode — swap in
-    torchaudio/pyav on a real cluster — or fall back to the
-    deterministic fake in test mode."""
+    8-bit PNG (stdlib zlib), 16-bit PCM WAV.  JPEG/GIF/MP3/MP4 raise
+    NotImplementedError in strict mode — swap in Pillow/pyav on a real
+    cluster — or fall back to the deterministic fake in test mode."""
     if payload[:2] == b"BM":
         return _pool_to_grid(_decode_bmp(payload))
     if payload[:2] == b"P6":
         return _pool_to_grid(_decode_ppm(payload))
     if payload[:8] == _PNG_SIG:
         return _pool_to_grid(_decode_png(payload))
-    if payload[:2] == b"\xff\xd8":
-        from tapes_spark.operators.jpeg_codec import decode_jpeg_luma
-
-        return _pool_to_grid(decode_jpeg_luma(payload))
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from tapes_spark.operators.gif_codec import decode_gif_luma
-
-        # animated GIF is the real multi-frame path: decode_gif_luma
-        # frame-samples up to GRID frames side by side, so the pooled
-        # grid captures temporal structure for 'video'-kind payloads
-        return _pool_to_grid(decode_gif_luma(payload, max_frames=GRID))
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         return _pool_to_grid(_decode_wav(payload))
     if not fake:
         raise NotImplementedError(
             "no decoder for this format in this environment (real paths: "
-            "BMP/PPM/PNG/JPEG/GIF/WAV); pass fake_decode=True or install "
-            "a codec backend (MP3/MP4 remain stubbed)"
+            "BMP/PPM/PNG/WAV); pass fake_decode=True or install a codec "
+            "backend (JPEG/GIF/MP3/MP4 remain stubbed)"
         )
     # deterministic fake: a pseudo-pixel array seeded by content hash
     digest = hashlib.sha256(payload).digest()
@@ -640,17 +623,12 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
 
 def make_real_media(spark, n: int = 12, seed: int = 42) -> DataFrame:
     """Deterministic synthetic media table with REAL encoded payloads
-    (BMP / PPM / PNG / JPEG / animated GIF / WAV round-robin) — drives
-    the strict decode path end to end with no external data or codec
-    libraries.  The GIF rows are multi-frame and typed kind='video', so
-    the frame-sample stage runs for real in every strict e2e pass."""
-    from tapes_spark.operators.gif_codec import encode_gif
-    from tapes_spark.operators.jpeg_codec import encode_jpeg
-
+    (BMP / PPM / PNG / WAV round-robin) — drives the strict decode path
+    end to end with no external data or codec libraries."""
     rows = []
     for i in range(n):
         rng = np.random.RandomState(seed * 1_000_003 + i)
-        kind_idx = i % 6
+        kind_idx = i % 4
         if kind_idx == 0:
             h, w = int(rng.randint(4, 24)), int(rng.randint(4, 24))
             rgb = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
@@ -663,36 +641,13 @@ def make_real_media(spark, n: int = 12, seed: int = 42) -> DataFrame:
             dur = None
         elif kind_idx == 2:
             h, w = int(rng.randint(4, 24)), int(rng.randint(4, 24))
-            depth = 4 if i % 12 == 2 else 3  # alternate RGB / RGBA
+            depth = 4 if i % 8 == 2 else 3  # alternate RGB / RGBA
             rgb = rng.randint(0, 256, size=(h, w, depth), dtype=np.uint8)
             payload, kind, mime = (
                 encode_png(rgb, filter_type=int(rng.randint(0, 5))),
                 "image", "image/png",
             )
             dur = None
-        elif kind_idx == 3:
-            h, w = int(rng.randint(8, 24)), int(rng.randint(8, 24))
-            rgb = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-            sub = ("444", "422", "420")[i % 3]
-            payload, kind, mime = (
-                encode_jpeg(rgb, quality=None, subsampling=sub),
-                "image", "image/jpeg",
-            )
-            dur = None
-        elif kind_idx == 4:
-            h, w = int(rng.randint(4, 16)), int(rng.randint(4, 16))
-            n_frames = int(rng.randint(2, 6))
-            frames = [
-                rng.randint(0, 8, size=(h, w), dtype=np.uint8)
-                for _ in range(n_frames)
-            ]
-            palette = rng.randint(0, 256, size=(8, 3), dtype=np.uint8)
-            payload, kind, mime = (
-                encode_gif(indexed=frames, palette=palette,
-                           interlace=bool(i % 2)),
-                "video", "image/gif",
-            )
-            dur = n_frames * 40
         else:
             n_samp = int(rng.randint(64, 2048))
             samp = rng.randint(-32768, 32767, size=n_samp).astype(np.int16)

@@ -302,9 +302,7 @@ def run_pipeline(
             sinks["conv_aggregates"], session_meta
         )
     if with_verdict_attach:
-        # staged frames are conv_id-bucketed scans: the folds' guard
-        # exchange (functions/partitioning.py) is provably unnecessary
-        va = attach_verdicts(enriched, pre_clustered=bool(stage_dir))
+        va = attach_verdicts(enriched)
         if persist or stage_dir:
             # link_tape embeds this subtree for its verdict links; without
             # a persist the whole matcher fold runs TWICE (once per sink
@@ -319,9 +317,7 @@ def run_pipeline(
     sinks["plan_attachments"] = attach_asof(enriched, "plan", ["ExitPlanMode"])
     # P11: the per-turn merkle chain tape (one row per valid turn) — wired
     # as a first-class sink so its cost is part of every pipeline bench
-    sinks["chain_tape"] = chain_hashes(
-        enriched, pre_clustered=bool(stage_dir)
-    )
+    sinks["chain_tape"] = chain_hashes(enriched)
     # the span-links dataflow graph (emits/feeds/compaction-seam/verdict);
     # with the J6 reconcile side-inputs the sink is the FULL union — every
     # declared LINK_KIND (rejoin + orphan-thread included) reaches the

@@ -3,13 +3,88 @@
 from __future__ import annotations
 
 import json
+import re
 from datetime import datetime, timezone
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from tapes_spark.operators import aggregate as agg
 from tapes_spark.pipeline import run_pipeline
+
+
+_TASKS_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("tasks_json", StringType()),
+        StructField("n_tasks", IntegerType()),
+        StructField("n_updates", IntegerType()),
+    ]
+)
+
+
+def tasks_fold_grouped(tool_tape):
+    """A4 as a grouped-map pandas fold — the direct transcription of the
+    reference's sequential replay, and the reference the native
+    ``agg.tasks_fold`` is pinned against.  The per-group fold is nested
+    so it pickles by value: Python workers cannot import this module."""
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        """Replay TaskCreate/TaskUpdate results in (ts, turn_idx) order —
+        id via regex ``#(\\d+)``, status/subject last-write-wins, 'deleted'
+        filtered, update counting (tapes tasks.go:14-111)."""
+        created = re.compile(r"#(\d+)(?::\s*(.*))?")
+        updated = re.compile(r"#(\d+)(?:\s+status=(\w+))?(?:\s+subject=(.*))?")
+        pdf = pdf.sort_values(["ts", "turn_idx"])
+        tasks: dict[int, dict] = {}
+        n_updates = 0
+        conv_id = pdf["conv_id"].iloc[0] if len(pdf) else None
+        for tool, raw in zip(pdf["tool"].tolist(), pdf["result_text"].tolist()):
+            text = str(raw or "")
+            if tool == "TaskCreate":
+                m = created.search(text)
+                if m:
+                    tid = int(m.group(1))
+                    tasks[tid] = {
+                        "id": tid,
+                        "subject": (m.group(2) or "").strip(),
+                        "status": "open",
+                        "updates": 0,
+                    }
+            elif tool == "TaskUpdate":
+                m = updated.search(text)
+                if m:
+                    tid = int(m.group(1))
+                    if tid in tasks:
+                        if m.group(2):
+                            tasks[tid]["status"] = m.group(2)
+                        if m.group(3):
+                            tasks[tid]["subject"] = m.group(3).strip()
+                        tasks[tid]["updates"] += 1
+                        n_updates += 1
+        live = [t for _, t in sorted(tasks.items()) if t["status"] != "deleted"]
+        return pd.DataFrame(
+            [
+                (
+                    conv_id,
+                    json.dumps(live, sort_keys=True, separators=(",", ":")),
+                    len(live),
+                    n_updates,
+                )
+            ],
+            columns=["conv_id", "tasks_json", "n_tasks", "n_updates"],
+        )
+
+    task_rows = tool_tape.filter(
+        F.col("tool").isin("TaskCreate", "TaskUpdate")
+        & F.col("result_text").isNotNull()
+    ).select("conv_id", "turn_idx", "tool", "result_text",
+             F.col("result_ts").alias("ts"))
+    return task_rows.groupBy("conv_id").applyInPandas(
+        fold, schema=_TASKS_SCHEMA
+    )
 
 
 def _ts(s: int):
@@ -91,7 +166,7 @@ class TestTasksFoldParity:
         }
         grouped = {
             r["conv_id"]: (r["tasks_json"], r["n_tasks"], r["n_updates"])
-            for r in agg.tasks_fold_grouped(tape).collect()
+            for r in tasks_fold_grouped(tape).collect()
         }
         assert native == grouped
 

@@ -311,3 +311,14 @@ class TestSampledTrainGuard:
         cents = ann_ivf.ivf_train(tiny, n_clusters=N_CLUSTERS, n_iters=2)
         dim = len(corpus.select("embedding").first()[0])
         assert cents.shape == (N_CLUSTERS, dim)
+
+    def test_empty_train_set_raises_clearly(self, spark, corpus):
+        """An empty train set fails with a clear error at any
+        train_fraction, not an opaque np.stack error in the seed pick."""
+        empty = corpus.filter("vec_id < 0")
+        for fraction in (1.0, 0.5):
+            with pytest.raises(ValueError, match="train set is empty"):
+                ann_ivf.ivf_train(
+                    empty, n_clusters=N_CLUSTERS, n_iters=2,
+                    train_fraction=fraction,
+                )

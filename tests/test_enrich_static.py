@@ -3,8 +3,10 @@
 The pipeline's static dims (role / pricing / tool) are applied as
 literal ``create_map`` lookups instead of BroadcastHashJoins.  These
 tests pin that the static variants produce bit-identical columns to the
-generic join variants over a corpus that exercises every branch:
-matched keys, unmatched keys, empty and NULL inputs.
+broadcast-join variants over a corpus that exercises every branch:
+matched keys, unmatched keys, empty and NULL inputs.  The role and
+pricing join variants live here as the references; the tool join
+variant is still a package path (custom tool dims).
 """
 
 from __future__ import annotations
@@ -14,13 +16,41 @@ from pyspark.sql import functions as F
 
 from tapes_spark import dims
 from tapes_spark.operators.enrich import (
-    enrich_pricing,
+    _with_cost,
     enrich_pricing_static,
-    enrich_role,
     enrich_role_static,
     enrich_tool,
     enrich_tool_static,
 )
+
+
+def enrich_role(df, role_dim_df):
+    """Role flags as a broadcast left join vs the role dimension."""
+    dim = F.broadcast(role_dim_df.withColumnRenamed("role", "r_role"))
+    return (
+        df.join(dim, df["role"] == dim["r_role"], "left")
+        .drop("r_role")
+        .withColumn(
+            "is_conversation", F.coalesce(F.col("is_conversation"), F.lit(False))
+        )
+        .withColumn("side", F.coalesce(F.col("side"), F.lit("unknown")))
+    )
+
+
+def enrich_pricing(df, pricing_dim_df):
+    """J10 cost as a broadcast left join vs the pricing dimension."""
+    dim = F.broadcast(pricing_dim_df.withColumnRenamed("model", "p_model"))
+    joined = df.join(dim, df["model_norm"] == dim["p_model"], "left").drop("p_model")
+    return _with_cost(
+        joined,
+        F.col("input_per_mtok"), F.col("output_per_mtok"),
+        F.col("cache_read_per_mtok"), F.col("cache_write_per_mtok"),
+    ).drop(
+        "input_per_mtok",
+        "output_per_mtok",
+        "cache_read_per_mtok",
+        "cache_write_per_mtok",
+    )
 
 
 def _assert_same(a, b, cols):

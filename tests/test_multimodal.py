@@ -110,6 +110,9 @@ class TestRealCodecs:
         mp3_magic = b"\xff\xfb\x90\x44" + bytes(64)  # MPEG-1 layer III sync
         with _pytest.raises(NotImplementedError):
             mm._decode_media(mp3_magic, fake=False)
+        for magic in (b"\xff\xd8\xff\xe0", b"GIF89a"):  # JPEG, GIF
+            with _pytest.raises(NotImplementedError):
+                mm._decode_media(magic + bytes(64), fake=False)
 
     def test_png_roundtrip_all_filters(self):
         """Every defilter path (0=None 1=Sub 2=Up 3=Average 4=Paeth) must

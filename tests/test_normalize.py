@@ -7,20 +7,41 @@ implemented pure-Python oracle under stable (conv_id, turn_idx) ordering.
 
 from __future__ import annotations
 
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
 
 from tapes_spark.functions.normalize import (
     CONTENT_BEARING_TAGS,
     normalize_model_py,
     normalize_text_py,
+    normalize_whitespace_col,
+    normalized_and_preview_cols,
     normalized_text_col,
     preview_text,
-    preview_text_col,
     strip_harness_tags,
 )
 from tests.naive_oracle import naive_normalize, naive_preview, naive_strip
+
+
+def preview_text_col(c):
+    """N4 over a text column (content-bearing tags unwrapped) — the
+    single-policy reference for the pipeline's fused two-policy strip.
+    The UDF is built here so it pickles by value: Python workers cannot
+    import this module."""
+
+    @pandas_udf(StringType())
+    def preview_tags(texts: pd.Series) -> pd.Series:
+        return texts.map(
+            lambda s: strip_harness_tags(s, CONTENT_BEARING_TAGS)
+            if s is not None else None
+        )
+
+    stripped = F.when(c.contains("<"), preview_tags(c)).otherwise(c)
+    return normalize_whitespace_col(stripped)
 
 
 class TestStripHarnessTags:
@@ -123,13 +144,18 @@ def test_preview_equivalence_fuzz(s):
 
 
 def test_spark_normalization_matches_oracle(spark, transcripts):
-    """Per-turn text equality under stable (conv_id, turn_idx) ordering."""
+    """Per-turn text equality under stable (conv_id, turn_idx) ordering;
+    the pipeline's fused two-policy strip must equal the single-policy
+    columns."""
+    fused_norm, fused_preview = normalized_and_preview_cols(F.col("text"))
     got = (
         transcripts.select(
             "conv_id",
             "turn_idx",
             normalized_text_col(F.col("text")).alias("text_norm"),
             preview_text_col(F.col("text")).alias("text_preview"),
+            fused_norm.alias("fused_norm"),
+            fused_preview.alias("fused_preview"),
         )
         .orderBy("conv_id", "turn_idx")
         .collect()
@@ -145,3 +171,6 @@ def test_spark_normalization_matches_oracle(spark, transcripts):
             s["turn_idx"],
         )
         assert g["text_preview"] == naive_preview(s["text"])
+        assert (g["fused_norm"], g["fused_preview"]) == (
+            g["text_norm"], g["text_preview"]
+        )
