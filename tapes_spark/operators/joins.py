@@ -127,6 +127,10 @@ def pair_tool_calls(df: DataFrame) -> DataFrame:
     if "src_conv_id" in df.columns:
         order.append(F.col("src_conv_id"))
         extra_cols.append("src_conv_id")
+    # final tie-break over every column the pairing reads: collided rows
+    # without src_conv_id then sort the same whatever the input order or
+    # partitioning, and rows still tied are identical in all of them
+    order += [F.col("role"), F.col("ts"), F.col("text")]
     lw = Window.partitionBy("conv_id", "tool").orderBy(*order)
     nxt = F.lead(
         F.struct(

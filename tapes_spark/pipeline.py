@@ -383,24 +383,34 @@ def run_metrics(
     need the per-conversation windows over the RAW capture stream — pass
     *raw_transcripts* to audit them (dropreason.go's per-reason counter
     contract).  Without raw input the transport counters are OMITTED,
-    never fabricated as zero.
+    never fabricated as zero.  Per-sink row counts are not repeated here:
+    ``SinkWriter.write_all`` puts each on the tape once per commit.
     """
     from tapes_spark.operators.dropreason import (
         DROP_REASONS,
         TRANSPORT_DROP_REASONS,
         with_full_drop_reason,
     )
+    from tapes_spark.tapelog.writer import metrics_frame
 
-    counters: list[tuple[str, str, float]] = []
-    enriched = result.enriched
-    counters.append((run_id, "turns_in", float(enriched.count())))
+    # One grouped job per histogram; the totals are their sums, and the
+    # per-sink row counts come from the sink commits (SinkWriter).
+    kind_hist = {
+        r["call_kind"]: r["count"]
+        for r in result.enriched.groupBy("call_kind").count().collect()
+    }
+    counters: list[tuple[str, str, float]] = [
+        (run_id, "turns_in", float(sum(kind_hist.values())))
+    ]
     quarantined = result.metrics.get("quarantined_rows")
     if quarantined is not None and not isinstance(quarantined, (int, float)):
-        counters.append((run_id, "turns_quarantined", float(quarantined.count())))
         derive_hist = {
             r["drop_reason"]: r["count"]
             for r in quarantined.groupBy("drop_reason").count().collect()
         }
+        counters.append(
+            (run_id, "turns_quarantined", float(sum(derive_hist.values())))
+        )
         for reason in DROP_REASONS:
             counters.append(
                 (run_id, f"drop_reason_{reason}",
@@ -420,19 +430,13 @@ def run_metrics(
                 (run_id, f"drop_reason_{reason}",
                  float(transport_hist.get(reason, 0)))
             )
-    kind_hist = {
-        r["call_kind"]: r["count"]
-        for r in enriched.groupBy("call_kind").count().collect()
-    }
     for k, v in sorted(kind_hist.items()):
         counters.append((run_id, f"call_kind_{k}", float(v)))
-    for name, df in result.sinks.items():
-        counters.append((run_id, f"sink_{name}_rows", float(df.count())))
     counters.append(
         (run_id, "wall_seconds",
          float(time.time() - result.metrics.get("wall_start", time.time())))
     )
-    return spark.createDataFrame(counters, ["run_id", "metric", "value"])
+    return metrics_frame(spark, counters)
 
 
 REPORT_SAMPLE_CAP = 20  # "a wholly broken pass doesn't produce a megabyte

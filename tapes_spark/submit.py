@@ -35,6 +35,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -135,6 +136,8 @@ def main(argv: list[str] | None = None) -> dict:
     if args.input is None and not args.maintain:
         build_parser().error("--input is required (except with --maintain)")
 
+    from pyspark.util import inheritable_thread_target
+
     from tapes_spark.pipeline import run_metrics, run_pipeline
     from tapes_spark.session import get_spark
     from tapes_spark.streaming.stream import batch_fingerprint
@@ -193,6 +196,7 @@ def main(argv: list[str] | None = None) -> dict:
         print(json.dumps(out))
         return out
 
+    fingerprint_job = None
     if args.input_tape:
         tape = TapeTable(spark, args.input)
         tx = tape.read()
@@ -203,16 +207,24 @@ def main(argv: list[str] | None = None) -> dict:
     else:
         tx = spark.read.parquet(args.input)
         # plain parquet has no snapshot lineage: one tiny narrow agg
-        # derives an order-insensitive, multiplicity-safe content id
-        fingerprint = f"content:{batch_fingerprint(tx)}"
+        # derives an order-insensitive, multiplicity-safe content id.  It
+        # runs on a worker thread while the driver plans the pipeline,
+        # which uses no executor.
+        pool = ThreadPoolExecutor(max_workers=1)
+        fingerprint_job = pool.submit(
+            inheritable_thread_target(spark)(batch_fingerprint), tx
+        )
+        pool.shutdown(wait=False)
 
     result = run_pipeline(spark, tx, stage_dir=args.stage_dir)
+    if fingerprint_job is not None:
+        fingerprint = f"content:{fingerprint_job.result()}"
     snapshots = writer.write_all(result.sinks, args.run_id, fingerprint)
     wrote_any = any(v is not None for v in snapshots.values())
     if wrote_any:
         # the auditable run tape (S10/A8): kinds, the FULL drop-reason
         # ladder (raw input passed so transport counters are audited,
-        # not omitted), sink rows
+        # not omitted); write_all already logged the sink rows
         writer.metrics.append(
             run_metrics(spark, result, args.run_id, raw_transcripts=tx),
             {"run_id": args.run_id, "fingerprint": fingerprint},

@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 
+import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -130,9 +131,10 @@ class IncrementalDeriver:
                 # skipping an Iceberg conv_id-bucketed layout gives)
                 page_input = self.input_tape.read_pruned("conv_id", page)
                 # broadcast semi-join, not isin: a 10^4-literal IN list
-                # builds a 10^4-node expression tree per scan
+                # builds a 10^4-node expression tree per scan.  Built from
+                # pandas so Arrow ships the keys (no Python worker)
                 page_df = self.spark.createDataFrame(
-                    [(c,) for c in page], "conv_id string"
+                    pd.DataFrame({"conv_id": page}), "conv_id string"
                 )
                 scoped = page_input.join(
                     F.broadcast(page_df), "conv_id", "left_semi"

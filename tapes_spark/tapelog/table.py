@@ -25,11 +25,16 @@ Semantics:
   * snapshots()               — the change feed (D4): consumers record the
         last snapshot id they processed and read only newer ones
   * lineage in every manifest — run_id, input fingerprint, operation,
-        per-write row counts (the auditable tape the north_rule asks for)
+        and ``rows``, the snapshot's row count (the auditable tape the
+        north_rule asks for).  Row counts and bucket stats are observed on
+        the write itself (``DataFrame.observe``), never read back.
 
 Writer concurrency: single-writer per table (the per-session advisory
-lock analog ST3 — in Spark one driver owns a sink).  Readers are safe at
-all times: data files are immutable and `_current` flips atomically.
+lock analog ST3 — in Spark one driver owns a sink).  Distinct tables may
+commit concurrently from different threads of one driver: ``SinkWriter
+.write_all`` commits its nine sinks that way, each table from exactly one
+thread.  Readers are safe at all times: data files are immutable and
+`_current` flips atomically.
 """
 
 from __future__ import annotations
@@ -41,7 +46,7 @@ import time
 import uuid
 import zlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Partition-pruning stats are hash-bucket sets, NOT value lists: a group's
@@ -117,16 +122,45 @@ class TapeTable:
 
     # ------------------------------------------------------------ write
 
-    def _write_data_group(self, df: DataFrame) -> tuple[str, list[str]]:
-        group = uuid.uuid4().hex
-        path = os.path.join(self.root, "data", group)
+    def _write_data_group(
+        self,
+        df: DataFrame,
+        partition_col: str | None = None,
+        observe: bool = True,
+    ) -> tuple[str, list[str], dict]:
+        """Write *df* as a new data group.  Returns (group dir, its files,
+        stats observed on the write itself): ``rows``, plus with
+        *partition_col* the group's key-hash ``buckets`` — bounded at
+        _N_BUCKETS values on the driver regardless of key cardinality.
+        A fresh Observation per write, since one reports only the first
+        action on its frame; no stats without *observe*."""
+        group_dir = os.path.join("data", uuid.uuid4().hex)
+        path = os.path.join(self.root, group_dir)
+        obs = Observation() if observe else None
+        if obs is not None:
+            exprs = [F.count(F.lit(1)).alias("rows")]
+            if partition_col is not None:
+                exprs.append(F.collect_set(
+                    F.crc32(F.col(partition_col).cast("string")) % _N_BUCKETS
+                ).alias("buckets"))
+            df = df.observe(obs, *exprs)
         df.write.mode("overwrite").parquet(path)
         files = sorted(
-            os.path.join("data", group, f)
+            os.path.join(group_dir, f)
             for f in os.listdir(path)
             if f.endswith(".parquet")
         )
-        return group, files
+        return group_dir, files, (obs.get if obs is not None else {})
+
+    @staticmethod
+    def _bucket_entry(stats: dict, partition_col: str) -> dict:
+        """Manifest bucket entry of a freshly written group.  Stats record
+        WHICH column they were computed on — bucket sets for one column
+        must never prune scans keyed on another."""
+        return {
+            "col": partition_col,
+            "buckets": sorted(int(b) for b in stats["buckets"]),
+        }
 
     def _commit(
         self,
@@ -134,17 +168,27 @@ class TapeTable:
         operation: str,
         lineage: dict | None,
         partition_buckets: dict[str, dict] | None = None,
+        group_rows: dict[str, int] | None = None,
     ) -> int:
+        """Publish a snapshot of *files*.  *group_rows* holds the observed
+        row count of each group dir; when every group of the snapshot has
+        one, their sum is recorded as the lineage's ``rows``."""
         parent = self.current_snapshot_id()
         snapshot_id = (parent or 0) + 1
+        dirs = {os.path.dirname(f) for f in files}
+        group_rows = {d: n for d, n in (group_rows or {}).items() if d in dirs}
+        lineage = dict(lineage or {})
+        if dirs <= group_rows.keys():
+            lineage["rows"] = sum(group_rows.values())
         manifest = {
             "snapshot_id": snapshot_id,
             "parent_id": parent,
             "operation": operation,
             "files": files,
             "committed_at_unix": time.time(),
-            "lineage": lineage or {},
+            "lineage": lineage,
             "partition_buckets": partition_buckets or {},
+            "group_rows": group_rows,
         }
         tmp = self._manifest_path(snapshot_id) + ".tmp"
         with open(tmp, "w") as f:
@@ -156,20 +200,6 @@ class TapeTable:
         os.replace(tmp_cur, self._current_path())  # atomic flip
         return snapshot_id
 
-    def _group_buckets(self, group_dir: str, partition_col: str) -> list[int]:
-        """Distinct key-hash buckets present in one data group — bounded
-        at _N_BUCKETS rows on the driver regardless of key cardinality."""
-        rows = (
-            self.spark.read.parquet(os.path.join(self.root, group_dir))
-            .select(
-                (F.crc32(F.col(partition_col).cast("string")) % _N_BUCKETS)
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r[0]) for r in rows)
-
     def append(
         self,
         df: DataFrame,
@@ -180,26 +210,27 @@ class TapeTable:
         manifest entry records its key-hash bucket set so later scans for
         a key subset (:meth:`read_pruned`) skip non-intersecting groups —
         the file-skipping a conv_id-bucketed Iceberg layout gives a
-        storage-partitioned scan."""
-        group, new_files = self._write_data_group(df)
+        storage-partitioned scan — and its observed row count."""
+        group_dir, new_files, stats = self._write_data_group(
+            df, partition_col, observe=partition_col is not None
+        )
         parent = self.current_snapshot_id()
-        prev_files = self.manifest(parent)["files"] if parent else []
-        prev_pb = self.manifest(parent).get("partition_buckets", {}) if parent else {}
+        prev = self.manifest(parent) if parent else {}
+        pb = dict(prev.get("partition_buckets", {}))
+        rows = dict(prev.get("group_rows", {}))
         if partition_col is not None and new_files:
-            # stats record WHICH column they were computed on — bucket
-            # sets for one column must never prune scans keyed on another
-            prev_pb = dict(prev_pb)
-            prev_pb[os.path.join("data", group)] = {
-                "col": partition_col,
-                "buckets": self._group_buckets(
-                    os.path.join("data", group), partition_col
-                ),
-            }
-        return self._commit(prev_files + new_files, "append", lineage, prev_pb)
+            pb[group_dir] = self._bucket_entry(stats, partition_col)
+            rows[group_dir] = stats["rows"]
+        return self._commit(
+            prev.get("files", []) + new_files, "append", lineage, pb, rows
+        )
 
     def overwrite(self, df: DataFrame, lineage: dict | None = None) -> int:
-        _, new_files = self._write_data_group(df)
-        return self._commit(new_files, "overwrite", lineage)
+        group_dir, new_files, stats = self._write_data_group(df)
+        return self._commit(
+            new_files, "overwrite", lineage,
+            group_rows={group_dir: stats["rows"]},
+        )
 
     def overwrite_partitions(
         self,
@@ -223,9 +254,11 @@ class TapeTable:
         kept_files: list[str] = []
         rewritten: list[DataFrame] = []
         prev_pb: dict[str, list[int]] = {}
+        prev_rows: dict[str, int] = {}
         if parent:
             m = self.manifest(parent)
             prev_pb = m.get("partition_buckets", {})
+            prev_rows = m.get("group_rows", {})
             # legacy manifests (pre-bucket) stored stringified value lists;
             # fold into bucket space AND record the column so the stats
             # stay applicable (legacy partition_values were always written
@@ -253,27 +286,17 @@ class TapeTable:
         to_write = df
         for r in rewritten:
             to_write = to_write.unionByName(r)
-        group, new_files = self._write_data_group(to_write)
-        group_dir = os.path.join("data", group)
-        # record the new group's bucket set for future pruning — bounded at
-        # _N_BUCKETS rows on the driver regardless of key cardinality
-        bucket_rows = (
-            self.spark.read.parquet(os.path.join(self.root, group_dir))
-            .select(
-                (F.crc32(F.col(partition_col).cast("string")) % _N_BUCKETS)
-                .alias("b")
-            )
-            .distinct()
-            .collect()
+        group_dir, new_files, stats = self._write_data_group(
+            to_write, partition_col
         )
         new_pb = {d: b for d, b in prev_pb.items()
                   if any(f.startswith(d) for f in kept_files)}
-        new_pb[group_dir] = {
-            "col": partition_col,
-            "buckets": sorted(int(r[0]) for r in bucket_rows),
-        }
+        new_pb[group_dir] = self._bucket_entry(stats, partition_col)
+        rows = dict(prev_rows)
+        rows[group_dir] = stats["rows"]
         return self._commit(
-            kept_files + new_files, "overwrite_partitions", lineage, new_pb
+            kept_files + new_files, "overwrite_partitions", lineage, new_pb,
+            rows,
         )
 
     # ------------------------------------------------------------- read
@@ -444,7 +467,7 @@ class TapeTable:
         merged = self.spark.read.parquet(
             *[os.path.join(self.root, f) for f in src_files]
         ).repartition(max(1, -(-cand_bytes // target_bytes)))
-        group, new_files = self._write_data_group(merged)
+        group_dir, new_files, stats = self._write_data_group(merged)
         kept_files = [
             f for f in m["files"] if os.path.dirname(f) not in cand_set
         ]
@@ -455,7 +478,7 @@ class TapeTable:
         entries = [pb.pop(d, None) for d in cand]
         cols = {e["col"] for e in entries if isinstance(e, dict) and "col" in e}
         if len(cols) == 1 and all(isinstance(e, dict) for e in entries):
-            pb[os.path.join("data", group)] = {
+            pb[group_dir] = {
                 "col": cols.pop(),
                 "buckets": sorted(
                     {b for e in entries for b in e.get("buckets", ())}
@@ -465,7 +488,9 @@ class TapeTable:
         info.setdefault("compacted_groups", len(cand))
         info.setdefault("compacted_files", len(src_files))
         info.setdefault("compacted_bytes", cand_bytes)
-        return self._commit(kept_files + new_files, "compact", info, pb)
+        rows = dict(m.get("group_rows", {}))
+        rows[group_dir] = stats["rows"]
+        return self._commit(kept_files + new_files, "compact", info, pb, rows)
 
     def expire_snapshots(self, keep_last: int = 5) -> dict:
         """Drop all but the newest *keep_last* snapshot manifests and

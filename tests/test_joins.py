@@ -59,9 +59,6 @@ class TestPairToolCalls:
         assert df.count() == 4
         assert df.select("conv_id", "turn_idx").distinct().count() == 4
 
-
-
-
     def test_consecutive_same_tool_calls_and_orphan_result(self, spark):
         """Edge cases the lead-based single-window pairing (r6) must hold:
         a result directly follows ITS call in the per-(conv, tool) stream,
@@ -83,6 +80,36 @@ class TestPairToolCalls:
             for r in pair_tool_calls(df).collect()
         }
         assert got == {1: None, 2: 3}
+
+    def test_collided_rows_pair_the_same_in_any_order(self, spark):
+        """Rows colliding on (conv_id, turn_idx) without a src_conv_id
+        column must pair identically whatever the input order and the
+        partition count: the window order ends in a deterministic
+        tie-break, not in shuffle order."""
+        rows = [
+            ("G", 1, "assistant", "Using tool Bash: one", "Bash", _ts(1)),
+            ("G", 1, "assistant", "Using tool Bash: two", "Bash", _ts(2)),
+            ("G", 2, "tool", "ok: first", "Bash", _ts(3)),
+            ("G", 2, "tool", "error: second", "Bash", _ts(3)),
+            ("G", 3, "assistant", "Using tool Bash: three", "Bash", _ts(5)),
+            ("G", 3, "tool", "ok: third", "Bash", _ts(6)),
+        ]
+        cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+        def paired(ordered, n_parts):
+            df = spark.createDataFrame(ordered, cols).repartition(n_parts)
+            return sorted(
+                tuple(r) for r in pair_tool_calls(df)
+                .select("turn_idx", "call_text", "result_turn_idx",
+                        "result_text")
+                .collect()
+            )
+
+        want = paired(rows, 1)
+        assert len(want) == 3
+        for ordered in (rows, rows[::-1], rows[2:] + rows[:2]):
+            for n_parts in (1, 3, 7):
+                assert paired(ordered, n_parts) == want
 
 
 class TestFirstCapture:

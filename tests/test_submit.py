@@ -5,6 +5,8 @@ re-submit it."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from tapes_spark import submit
@@ -63,6 +65,89 @@ class TestFullMode:
             "run_id = 'r2' and metric != 'write_all_sec'"
         ).count() == 0
         assert m.count() <= n_metrics + 1
+
+
+class TestMetricsTape:
+    # every counter one full submit of the module corpus puts on the
+    # metrics tape, pinned from the recount path that wrote each sink's
+    # rows twice (once from write_all's read-back, once from run_metrics)
+    PINNED = {
+        "turns_in": 53.0,
+        "turns_quarantined": 1.0,
+        "drop_reason_duplicate_capture": 0.0,
+        "drop_reason_empty_turn": 0.0,
+        "drop_reason_missing_attribution": 0.0,
+        "drop_reason_missing_order": 0.0,
+        "drop_reason_missing_role": 0.0,
+        "drop_reason_missing_ts": 0.0,
+        "drop_reason_ts_regression": 0.0,
+        "drop_reason_unknown_role": 1.0,
+        "call_kind_check": 1.0,
+        "call_kind_compaction": 1.0,
+        "call_kind_main": 23.0,
+        "call_kind_plan": 1.0,
+        "call_kind_prompt": 11.0,
+        "call_kind_suggestion": 1.0,
+        "call_kind_title": 1.0,
+        "call_kind_tool_result": 13.0,
+        "call_kind_web": 1.0,
+        "sink_conversation_tape_rows": 11.0,
+        "sink_tool_tape_rows": 13.0,
+        "sink_error_tape_rows": 1.0,
+        "sink_conv_aggregates_rows": 6.0,
+        "sink_verdict_attachments_rows": 1.0,
+        "sink_web_attachments_rows": 1.0,
+        "sink_plan_attachments_rows": 1.0,
+        "sink_chain_tape_rows": 53.0,
+        "sink_link_tape_rows": 28.0,
+    }
+    TIMINGS = {
+        "write_all_sec", "wall_seconds",
+        *(f"sink_{name}_write_sec" for name in SINK_NAMES),
+    }
+    # jobs of one full submit on the module corpus, cold cache: 90 when
+    # the sinks committed one by one and were counted by read-back; 47
+    # with concurrent commits and counts observed on the writes
+    JOB_BUDGET = 51
+
+    def test_each_counter_once_with_pinned_values(
+        self, spark, tx_path, tmp_path
+    ):
+        sinks = str(tmp_path / "sinks")
+        submit.main(["--input", tx_path, "--sinks", sinks, "--run-id", "r1"])
+        rows = [
+            (r["metric"], r["value"])
+            for r in SinkWriter(spark, sinks).metrics.read().collect()
+        ]
+        counts = Counter(m for m, _ in rows)
+        assert {m for m, n in counts.items() if n > 1} == set()
+        assert set(counts) == set(self.PINNED) | self.TIMINGS
+        assert {m: v for m, v in rows if m in self.PINNED} == self.PINNED
+
+    def test_job_budget(self, spark, tx_path, tmp_path):
+        """A later change that brings back a recount (or a read-back per
+        sink) breaks the budget.  Worker threads (sink commits, the
+        fingerprint) that lose the caller's job group launch ungrouped
+        jobs: without the inheritance only 9 jobs stay in the group."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        # frames cached by earlier submits of the same input would let
+        # this one skip jobs
+        spark.catalog.clearCache()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        group = "test-submit-job-budget"
+        sc.setJobGroup(group, group)
+        try:
+            submit.main(
+                ["--input", tx_path, "--sinks", str(tmp_path / "sinks"),
+                 "--run-id", "r1"]
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # (the tracker drops its oldest jobs, so compare new ids only)
+        assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+        n_jobs = len(tracker.getJobIdsForGroup(group))
+        assert len(SINK_NAMES) <= n_jobs <= self.JOB_BUDGET
 
 
 class TestIncrementalMode:

@@ -4,11 +4,14 @@ re-derive (SURVEY.md §2.8, §2.10; build plan steps 6-7)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from tapes_spark.pipeline import run_pipeline
 from tapes_spark.tapelog import IncrementalDeriver, SinkWriter, TapeTable
+from tapes_spark.tapelog.table import _key_bucket
 
 
 def _comparable(df):
@@ -24,6 +27,33 @@ def _comparable(df):
 def _same(a, b) -> bool:
     a, b = _comparable(a), _comparable(b)
     return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def _read_back_buckets(spark, table, group_dir, col="conv_id"):
+    """A group's key-hash buckets, read back from its files."""
+    rows = (
+        spark.read.parquet(os.path.join(table.root, group_dir))
+        .select((F.crc32(F.col(col).cast("string")) % 1024).alias("b"))
+        .distinct()
+        .collect()
+    )
+    return sorted(int(r["b"]) for r in rows)
+
+
+def _pruned_by_read_back(spark, table, keys):
+    """TapeTable.pruned_files with every group's bucket set read back from
+    its files instead of taken from the manifest."""
+    m = table.manifest(table.current_snapshot_id())
+    key_buckets = {_key_bucket(k) for k in keys}
+    kept = []
+    for f in m["files"]:
+        group_dir = os.path.dirname(f)
+        entry = m["partition_buckets"].get(group_dir)
+        if entry is None or entry.get("col") != "conv_id" or (
+            key_buckets & set(_read_back_buckets(spark, table, group_dir))
+        ):
+            kept.append(f)
+    return kept
 
 
 class TestTapeTable:
@@ -132,6 +162,47 @@ class TestTapeTable:
         assert m["lineage"] == {"run_id": "r1", "fingerprint": "f1"}
         assert m["operation"] == "append"
 
+    def test_observed_stats_equal_read_back(self, spark, tmp_path):
+        """The row count and bucket sets observed on each write equal what
+        reading the committed data back gives: `rows` is the snapshot's
+        row count, each group's buckets the distinct crc32 % 1024 of its
+        keys."""
+        t = TapeTable(spark, str(tmp_path / "t7"))
+        keyed = spark.range(3000).select(
+            F.concat(F.lit("conv-"), (F.col("id") % 500).cast("string"))
+            .alias("conv_id"),
+            F.col("id").alias("v"),
+        )
+
+        def check(sid):
+            m = t.manifest(sid)
+            assert m["lineage"]["rows"] == t.read(sid).count()
+            for group_dir, entry in m["partition_buckets"].items():
+                assert _read_back_buckets(spark, t, group_dir) == entry["buckets"]
+
+        s = t.append(keyed.filter("v < 1500"), partition_col="conv_id")
+        check(s)
+        s = t.append(keyed.filter("v >= 1500"), partition_col="conv_id")
+        check(s)
+        # a rewritten group: conv-1 lives in both groups
+        s = t.overwrite_partitions(
+            spark.createDataFrame([("conv-1", -1)], "conv_id string, v bigint"),
+            "conv_id", ["conv-1"],
+        )
+        assert t.manifest(s)["operation"] == "overwrite_partitions"
+        check(s)
+        # an empty incoming frame: the key's rows only disappear
+        s = t.overwrite_partitions(
+            spark.createDataFrame([], "conv_id string, v bigint"),
+            "conv_id", ["conv-2"],
+        )
+        check(s)
+        assert t.read(s).filter("conv_id = 'conv-2'").count() == 0
+
+        o = TapeTable(spark, str(tmp_path / "t8"))
+        s = o.overwrite(keyed, {"run_id": "r1"})
+        assert o.manifest(s)["lineage"] == {"run_id": "r1", "rows": 3000}
+
 
 class TestSinkWriterResume:
     def test_resume_after_partial_failure(self, spark, transcripts, tmp_path):
@@ -157,6 +228,38 @@ class TestSinkWriterResume:
 
         for name in res.sinks:
             assert _same(clean.read(name), crashed.read(name)), name
+
+    def test_failed_commit_stays_isolated(self, spark, transcripts,
+                                          tmp_path, monkeypatch):
+        """The sinks commit concurrently: one failing commit must not stop
+        or undo the others, write_all re-raises it once all are done, and
+        a re-submit writes only the failed sink."""
+        res = run_pipeline(spark, transcripts)
+        fingerprint = "in:1"
+        clean = SinkWriter(spark, str(tmp_path / "clean"))
+        clean.write_all(res.sinks, "run-clean", fingerprint)
+
+        w = SinkWriter(spark, str(tmp_path / "failing"))
+
+        def disk_full(df, lineage=None):
+            raise OSError("disk full")
+
+        monkeypatch.setattr(w.tables["error_tape"], "overwrite", disk_full)
+        with pytest.raises(OSError, match="disk full"):
+            w.write_all(res.sinks, "run-1", fingerprint)
+        for name, table in w.tables.items():
+            if name == "error_tape":
+                assert table.current_snapshot_id() is None
+            else:
+                assert w._sink_done(name, fingerprint), name
+        monkeypatch.undo()
+
+        resumed = w.write_all(res.sinks, "run-2", fingerprint)
+        assert [n for n, sid in resumed.items() if sid is not None] == [
+            "error_tape"
+        ]
+        for name in res.sinks:
+            assert _same(clean.read(name), w.read(name)), name
 
     def test_metrics_tape_appends(self, spark, transcripts, tmp_path):
         res = run_pipeline(spark, transcripts)
@@ -280,6 +383,14 @@ class TestIncrementalDerive:
             spark, input_tape, writer, page_size=3
         ).process("run-1")
         assert r["dirty"] == 8 and r["pages"] == 3
+        # the bucket stats observed on the writes prune exactly like stats
+        # read back from the written files
+        for table in (input_tape, writer.tables["conversation_tape"],
+                      writer.tables["chain_tape"]):
+            for chunk in chunks:
+                assert table.pruned_files("conv_id", chunk) == (
+                    _pruned_by_read_back(spark, table, chunk)
+                ), table.root
         input_tape2 = TapeTable(spark, str(tmp_path / "inputp2"))
         input_tape2.append(transcripts)
         writer2 = SinkWriter(spark, str(tmp_path / "sinksp2"))
